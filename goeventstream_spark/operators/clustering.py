@@ -645,20 +645,20 @@ def ivf_cell_assign_capped(
         # anyway); only a driver barrier disappears — measured 15 -> 12
         # jobs, ~0.9 s/construction at sf0.1 (OPTIMIZATION_r10.md).
         counts_df, seeds_df = hot_cell_detection_plans(base, k)
-        v_type = dict(seeds_df.dtypes)["v"]
+        # The NULL padding takes each column's real type: the caller's
+        # id_col may be any orderable type, not only BIGINT.
+        seed_types = dict(seeds_df.dtypes)
         probe = counts_df.select(
             "cell",
-            F.col("_n").alias("_n"),
-            F.lit(None).cast("long").alias("vec_id"),
-            F.lit(None).cast(v_type).alias("v"),
-            F.lit(None).cast("int").alias("_rk"),
+            "_n",
+            *[F.lit(None).cast(seed_types[c]).alias(c) for c in ("vec_id", "v", "_rk")],
         ).unionByName(
             seeds_df.select(
                 "cell",
                 F.lit(None).cast(dict(counts_df.dtypes)["_n"]).alias("_n"),
                 "vec_id",
                 "v",
-                F.col("_rk").cast("int").alias("_rk"),
+                "_rk",
             )
         )
         rows = probe.collect()

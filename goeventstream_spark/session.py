@@ -9,8 +9,23 @@ every config below is chosen to hold at cluster scale:
   path while the planner adapts partition counts.
 - Arrow on for the few Pandas-UDF operators (multimodal decode) so
   Python exchange is columnar-batched, never per-row pickling.
-- shuffle.partitions is a *ceiling* under AQE coalescing; at cluster
-  scale this should be set to ~2-3x total cores by the deployer.
+- shuffle.partitions sizes the batch shuffles, which AQE coalesces at
+  runtime; at cluster scale the deployer sets it to ~2-3x total cores.
+  It is NOT a ceiling for streaming stateful operators: AQE is off for
+  them, and the state store keeps the partition count the query was
+  first started with. ``streaming.game_server`` therefore runs every
+  state partition on each trigger, each a Python task plus a
+  state-store commit, however few games the batch touched.
+- Python workers fork from the engine's own daemon,
+  ``goeventstream_spark._pydaemon`` (``spark.python.daemon.module``).
+  PySpark invalidates import caches before every task, and up to
+  CPython 3.12 that re-reads the central directory of ``pyspark.zip``
+  and the Spark jar once per zip importer: ~0.24 s of CPU per task,
+  most of a serve-loop trigger. The daemon re-reads an archive only when
+  it changed. CPython 3.13 made the re-read lazy, so there the daemon
+  installs nothing; delete it once the lowest supported Python is 3.13.
+  The package's parent directory goes on the workers' ``PYTHONPATH`` so
+  the daemon and the stateful UDFs import from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +33,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Directory that holds the package: Python workers need it on their path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,6 +68,9 @@ def get_spark(
         # --- python exchange --------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # Workers fork from the engine's daemon (see module docstring),
+        # which must import from any working directory.
+        .config("spark.python.daemon.module", "goeventstream_spark._pydaemon")
         # --- broadcast: dims (region/nation/customer/supplier/part at
         # 100 TB the first two stay tiny; AQE upgrades others at runtime)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -66,4 +87,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # ``environment`` holds the spark.executorEnv.* values every Python
+    # UDF ships to its daemon; put the package in front of any
+    # PYTHONPATH already set there.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
+    return spark

@@ -318,27 +318,34 @@ class HttpWireBridge:
         return self
 
     def _serve_tcp(self) -> None:
+        # One feeder thread per connection: a stream restarted on this
+        # bridge connects while the feeder of the stopped stream may
+        # still wait for lines on a socket whose peer has gone; the new
+        # connection must not queue behind it.
         while not self._stop:
             try:
                 conn, _ = self._tcp.accept()
             except OSError:
                 return
-            # replay from the start of the buffer (at-least-once on
-            # reconnect — what a broker offset-reset would do)
-            cursor = 0
-            try:
-                while not self._stop:
-                    with self._lock:
-                        while cursor >= len(self._lines) and not self._stop:
-                            self._lock.wait(timeout=0.2)
-                        batch = self._lines[cursor:]
-                        cursor = len(self._lines)
-                    for line in batch:
-                        conn.sendall(line + b"\n")
-            except OSError:
-                continue  # client went away; accept again
-            finally:
-                conn.close()
+            threading.Thread(target=self._feed, args=(conn,), daemon=True).start()
+
+    def _feed(self, conn: socket.socket) -> None:
+        # replay from the start of the buffer (at-least-once on
+        # reconnect — what a broker offset-reset would do)
+        cursor = 0
+        try:
+            while not self._stop:
+                with self._lock:
+                    while cursor >= len(self._lines) and not self._stop:
+                        self._lock.wait(timeout=0.2)
+                    batch = self._lines[cursor:]
+                    cursor = len(self._lines)
+                for line in batch:
+                    conn.sendall(line + b"\n")
+        except OSError:
+            pass  # client went away
+        finally:
+            conn.close()
 
     def deliver(self, sync_id: int, response: str) -> None:
         """Hand a game_server envelope back to the waiting POST for
@@ -549,6 +556,19 @@ def serve_inline(
     each micro-batch — bounded by the poll rate per trigger, never by
     corpus size; the heavy lifting (parse, per-game state machine)
     stays distributed in game_server.
+
+    Each POST waits for one trigger. ``game_server`` runs every state
+    partition on every trigger (``spark.sql.shuffle.partitions`` at the
+    first start of the checkpoint), each a Python task plus a RocksDB
+    commit. Per trigger of 4 polls on 4 partitions (local[4], 4-core
+    x86, medians): ~520 ms trigger = ~420 ms addBatch + ~35 ms planning
+    + ~35 ms WAL + ~35 ms offset commit. Inside addBatch, summed over
+    the 4 parallel partitions: ~310 ms of state updates (the Python
+    task) and ~600 ms of state commits, ~520 ms of it
+    ``rocksdbCommitFileSyncLatencyMs``. With the engine's worker daemon
+    (see ``session``) the per-task zip re-read is gone and the RocksDB
+    commit is the next floor; under the stock daemon state updates took
+    ~1.35 s summed.
     """
     from goeventstream_spark.streaming import game_server
 

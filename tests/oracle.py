@@ -30,22 +30,26 @@ from goeventstream_spark.sources import TABLES
 
 _GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden_oracle")
 _GOLDEN_MIN_SEC = 10.0
-_FP_CACHE: dict[str, str] = {}
+# (path, st_mtime_ns, st_size) -> md5 of the file: a regenerated
+# fixture has a new stamp, so its fingerprint is computed again.
+_FP_CACHE: dict[tuple[str, int, int], str] = {}
+
+
+def _file_md5(path: str) -> str:
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+        digest = _FP_CACHE.get(key)
+        if digest is None:
+            with open(path, "rb") as f:
+                digest = _FP_CACHE[key] = hashlib.md5(f.read()).hexdigest()
+    except OSError:
+        return "missing"
+    return digest
 
 
 def _fixture_fingerprint(sf_dir: str) -> str:
-    fp = _FP_CACHE.get(sf_dir)
-    if fp is None:
-        parts = []
-        for t in TABLES:
-            p = f"{sf_dir}/{t}.parquet"
-            try:
-                with open(p, "rb") as f:
-                    parts.append(f"{t}:{hashlib.md5(f.read()).hexdigest()}")
-            except OSError:
-                parts.append(f"{t}:missing")
-        fp = _FP_CACHE[sf_dir] = ";".join(parts)
-    return fp
+    return ";".join(f"{t}:{_file_md5(f'{sf_dir}/{t}.parquet')}" for t in TABLES)
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

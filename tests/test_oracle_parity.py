@@ -36,3 +36,20 @@ def test_query_matches_oracle(spark, sf_dir, name):
         return
     oracle_pdf = run_oracle(q.ORACLES[name], sf_dir)
     assert_frames_match(spark_pdf, oracle_pdf, name)
+
+
+def test_fixture_fingerprint_follows_a_regenerated_table(tmp_path):
+    """Golden oracle results are keyed on the fixture fingerprint, so a
+    table rewritten in place must change it within the same process."""
+    import os
+
+    from tests.oracle import _fixture_fingerprint
+
+    table = tmp_path / "events.parquet"
+    table.write_bytes(b"first")
+    before = _fixture_fingerprint(str(tmp_path))
+    assert _fixture_fingerprint(str(tmp_path)) == before
+    table.write_bytes(b"second!")
+    st = os.stat(table)
+    os.utime(table, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert _fixture_fingerprint(str(tmp_path)) != before

@@ -790,6 +790,19 @@ def test_ivf_cell_assign_precomputed_centroids_skip_training(spark, sf_dir):
     assert "Join" not in plan, plan
 
 
+def _adversarial_vec(i: int) -> list[float]:
+    """Deterministic adversarial IVF fixture: 160/200 vectors in a spread
+    cluster near (0.8..0.9)^4, 40 in three far-apart cold regions. Cold
+    vectors take the LOW ids so the lowest-id k-means seeds all start
+    outside the hot cluster — the whole cluster then collapses into the
+    single nearest cell (the skew shape the hot-cell guard targets)."""
+    if i >= 40:  # hot cluster, spread so a sub-k-means can split it
+        return [0.8 + 0.1 * (((i * (d + 3)) % 17) / 17.0) for d in range(4)]
+    base = [(-0.9, -0.9, -0.9, -0.9), (0.9, -0.9, 0.9, -0.9),
+            (-0.9, 0.9, -0.9, 0.9)][i % 3]
+    return [b + 0.001 * (i // 3) for b in base]
+
+
 def test_ivf_capped_splits_adversarial_hot_cell(spark):
     """Hot-cell guard (the 100 TB skew hazard): an adversarial corpus
     that concentrates 80% of vectors in one dense region puts them all
@@ -805,20 +818,8 @@ def test_ivf_capped_splits_adversarial_hot_cell(spark):
         ivf_cell_assign_capped,
     )
 
-    # Deterministic adversarial fixture: 160/200 vectors in a spread
-    # cluster near (0.8..0.9)^4, 40 in three far-apart cold regions.
-    # Cold vectors take the LOW ids so the lowest-id k-means seeds all
-    # start outside the hot cluster — the whole cluster then collapses
-    # into the single nearest cell (the skew shape the guard targets).
-    def vec(i: int) -> list[float]:
-        if i >= 40:  # hot cluster, spread so a sub-k-means can split it
-            return [0.8 + 0.1 * (((i * (d + 3)) % 17) / 17.0) for d in range(4)]
-        base = [(-0.9, -0.9, -0.9, -0.9), (0.9, -0.9, 0.9, -0.9),
-                (-0.9, 0.9, -0.9, 0.9)][i % 3]
-        return [b + 0.001 * (i // 3) for b in base]
-
     emb = spark.createDataFrame(
-        [Row(vec_id=i, label=i % 3, embedding=vec(i)) for i in range(200)]
+        [Row(vec_id=i, label=i % 3, embedding=_adversarial_vec(i)) for i in range(200)]
     )
 
     base = ivf_cell_assign(emb, k=4, iters=2)
@@ -855,6 +856,38 @@ def test_ivf_capped_splits_adversarial_hot_cell(spark):
         .collect()
     }
     assert rerun == capped_map
+
+
+def test_ivf_capped_accepts_non_bigint_ids(spark):
+    """The hot-cell probe pads its union with NULLs of the seeds' own
+    id and rank types: a STRING or INT ``id_col`` must split the hot
+    cell exactly as BIGINT ids of the same order do."""
+    from pyspark.sql import Row
+
+    from goeventstream_spark.operators.clustering import ivf_cell_assign_capped
+
+    emb = spark.createDataFrame(
+        [Row(vec_id=i, key=f"v{i:04d}", embedding=_adversarial_vec(i)) for i in range(200)]
+    ).selectExpr("vec_id", "key", "CAST(vec_id AS INT) AS small", "embedding")
+    want = {
+        r.vec_id: r.cell
+        for r in ivf_cell_assign_capped(emb, k=4, iters=2, cap=80).collect()
+    }
+    assert max(want.values()) >= 4  # the hot cell was split
+    by_key = {
+        r.key: r.cell
+        for r in ivf_cell_assign_capped(
+            emb.drop("vec_id"), k=4, iters=2, cap=80, id_col="key"
+        ).collect()
+    }
+    assert by_key == {f"v{i:04d}": c for i, c in want.items()}
+    by_int = {
+        r.small: r.cell
+        for r in ivf_cell_assign_capped(
+            emb.drop("vec_id"), k=4, iters=2, cap=80, id_col="small"
+        ).collect()
+    }
+    assert by_int == want
 
 
 def test_ivf_capped_noop_and_frac_on_fixture(spark, sf_dir):

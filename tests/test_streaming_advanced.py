@@ -1040,6 +1040,96 @@ def test_game_server_state_scale_10000_games_rocksdb(spark):
     spark.catalog.dropTempView("scale_server_out")
 
 
+_SERVE_RESTART_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from goeventstream_spark import get_spark
+from goeventstream_spark.operators import protocol_replay as pr
+from goeventstream_spark.sources.http_bridge import HttpWireBridge, serve_inline
+
+ckpt = sys.argv[2]
+base = 1_800_000_000_000
+bridge = HttpWireBridge(inline_timeout_s=60).start()
+sched, inline, daemons = [], {}, []
+
+
+def poll(game, user, now, events=None, state=None):
+    sid = len(sched) + 1  # bridge assigns 1..n in arrival order; polls are serial
+    inline[sid] = bridge.post_sync(
+        game, str(user), 0, events=events, state=state, now_ms=base + now
+    )
+    sched.append((game, sid, user, base + now, events or [], state))
+
+
+def run(first, last):
+    # A new SparkContext: a new Python daemon, new workers, one stream
+    # on the shared checkpoint.
+    spark = get_spark(app_name="serve-restart", master="local[2]", shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    daemons.append(spark.sparkContext.parallelize([0], 1).map(lambda _: __import__("os").getppid()).first())
+    q = serve_inline(spark, bridge, trigger_ms=200, checkpoint_dir=ckpt)
+    try:
+        for i in range(first, last):
+            poll("g0", 7 + i % 3, i * 200,
+                 events=[("m", str(i))] if i % 3 == 0 else None,
+                 state={"hp": str(100 - i)} if i % 4 == 0 else None)
+            poll("g1", 7, i * 170 + 30, events=[("f", str(i))] if i % 2 else None)
+    finally:
+        q.stop()
+    return spark
+
+
+run(0, 6).stop()
+spark = run(6, 12)
+bridge.stop()
+syncs = spark.createDataFrame(
+    [(s, u, ms, g) for g, s, u, ms, _e, _st in sched],
+    "sync_id long, user_id long, poll_ms long, game_key string",
+)
+posted = spark.createDataFrame(
+    [(s, seq, et, body) for _g, s, _u, _ms, evs, _st in sched for seq, (et, body) in enumerate(evs)],
+    "sync_id long, event_seq long, event_type string, body string",
+)
+states = spark.createDataFrame(
+    [(s, json.dumps(st, separators=(",", ":"))) for _g, s, _u, _ms, _e, st in sched if st is not None],
+    "sync_id long, data string",
+)
+want = {r.sync_id: r.response for r in pr.game_response(syncs, posted, states, game_col="game_key").collect()}
+print(json.dumps({"daemons": daemons, "inline": inline, "want": want}))
+spark.stop()
+"""
+
+
+def test_serve_inline_restart_from_checkpoint_is_byte_equal(tmp_path):
+    """The reference's determinism invariant across a server restart:
+    ``serve_inline`` is stopped after 12 polls and a new one, in a new
+    SparkContext (new Python daemon and workers), resumes on the same
+    ``checkpoint_dir`` and bridge. Every envelope, before and after the
+    restart, must be byte-equal to the batch ``game_response`` replay of
+    the whole schedule. Runs in a child process, from a foreign working
+    directory with no PYTHONPATH, because it stops its SparkContext."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", _SERVE_RESTART_SCRIPT, root, str(tmp_path / "ckpt")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(set(res["daemons"])) == 2, res["daemons"]
+    inline, want = res["inline"], res["want"]
+    assert sorted(inline, key=int) == sorted(want, key=int) and len(want) == 24
+    not_ok = {s: st for s, (st, _) in inline.items() if st != 200}
+    assert not not_ok, not_ok
+    mismatches = [(s, inline[s][1], want[s]) for s in sorted(want, key=int) if inline[s][1] != want[s]]
+    assert not mismatches, mismatches[:3]
+
+
 def test_inline_bridge_falls_back_to_ack_on_timeout():
     """With inline_timeout_s set but no engine attached, a POST must
     degrade to the documented decoupled contract — HTTP 202 with the
