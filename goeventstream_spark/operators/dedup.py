@@ -32,19 +32,6 @@ from goeventstream_spark.sources.tables import scan_fanout_for
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
 
-# Pointer jumping in dedup_clusters (round 10): value-neutral round
-# compression (shortcut lbl -> lbl(lbl) alongside each propagation
-# round; same fixpoint, O(log diameter) rounds). Implemented for
-# VERDICT r9 #4, MEASURED and REJECTED as the default: near-dup
-# components are short chains, propagation already converges in 3-5
-# rounds at any SF, and the jump's extra |V|-row self-join per round
-# costs more than the 1-2 rounds it saves — interleaved A/B at sf0.1:
-# er_golden_parts 3.3-3.5 s without vs 4.3-5.0 s with, dedup_clusters
-# 1.5-1.6 vs 1.6-2.1, dedup_cluster_size_histogram 1.6-1.7 vs 1.9-2.2,
-# curate_corpus_near 4.4 vs 4.7-5.6 (OPTIMIZATION_r10.md). For
-# adversarially deep components the O(log n) path is
-# dedup_clusters_contraction, which the docstring already routes to.
-_POINTER_JUMP = False
 DEFAULT_SHINGLE_K = 3
 SIMHASH_BITS = 32
 
@@ -790,36 +777,8 @@ def dedup_clusters(
             "lbl",
             F.lit(None).cast(lbl_type).alias("_prev"),
         )
-        # Pointer jumping (round 10, VERDICT r9 #4 — guide §2.2
-        # iterative shuffles): alongside each propagation round,
-        # shortcut every vertex's label to its LABEL'S label — one
-        # extra |V|-row equi-join per round that makes label depth
-        # halve each round, so rounds drop from O(diameter) to
-        # O(log diameter) on chain-shaped components (measured on
-        # er_golden_parts / dedup_clusters: 5 propagation rounds → 3).
-        # The fixpoint is unchanged (min reachable id is a component
-        # property; at the fixpoint lbl(lbl(v)) = lbl(v), so the jump
-        # rows are no-ops exactly when propagation has converged, and
-        # the same changed-count detects it). Every lbl value is a
-        # vertex id present in `labels`, so the inner join drops
-        # nothing; jump rows carry a NULL _prev like propagation
-        # messages. Scale note: the join probes by lbl, which is hot
-        # inside big components — an AQE-skew-splittable equi-join,
-        # the same exposure the propagation join already has on hub
-        # vertices.
+        # Pointer jumping was measured slower here (OPTIMIZATION_r10.md §4).
         rows = labels.withColumn("_prev", F.col("lbl")).union(msgs)
-        if _POINTER_JUMP:
-            jump = labels.join(
-                labels.select(
-                    F.col("id").alias("lbl"), F.col("lbl").alias("_lbl2")
-                ),
-                "lbl",
-            ).select(
-                "id",
-                F.col("_lbl2").alias("lbl"),
-                F.lit(None).cast(lbl_type).alias("_prev"),
-            )
-            rows = rows.union(jump)
         # Lazy checkpoint: the convergence count below is the action
         # that materializes it — one job per round instead of two.
         # The previous label rides the same shuffle as the min-agg

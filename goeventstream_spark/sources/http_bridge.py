@@ -561,14 +561,16 @@ def serve_inline(
     partition on every trigger (``spark.sql.shuffle.partitions`` at the
     first start of the checkpoint), each a Python task plus a RocksDB
     commit. Per trigger of 4 polls on 4 partitions (local[4], 4-core
-    x86, medians): ~520 ms trigger = ~420 ms addBatch + ~35 ms planning
-    + ~35 ms WAL + ~35 ms offset commit. Inside addBatch, summed over
-    the 4 parallel partitions: ~310 ms of state updates (the Python
-    task) and ~600 ms of state commits, ~520 ms of it
-    ``rocksdbCommitFileSyncLatencyMs``. With the engine's worker daemon
-    (see ``session``) the per-task zip re-read is gone and the RocksDB
-    commit is the next floor; under the stock daemon state updates took
-    ~1.35 s summed.
+    x86, medians): ~400-490 ms trigger = ~340-420 ms addBatch + ~35 ms
+    planning + ~9 ms WAL + ~11 ms offset commit. Inside addBatch, summed
+    over the 4 parallel partitions: ~300 ms of state updates (the Python
+    task) and ~300-360 ms of state commits. The FileSystem checkpoint
+    manager (see ``session``) took WAL from ~35 ms, offset commit from
+    ~37 ms and state commits from ~660-800 ms; the difference was forked
+    ``readlink`` processes. The next floor is the state commit's zip and
+    SST upload, whose every file create forks ``chmod``
+    (``RawLocalFileSystem.setPermission`` without native libhadoop),
+    then the Python state update.
     """
     from goeventstream_spark.streaming import game_server
 

@@ -34,59 +34,19 @@ TABLES = (
 )
 
 
-# Scan fan-out (optimization round 9, guide §2.5 "input skew: one huge
-# unsplittable file … repartition immediately after the read"): the sf
-# fixtures are single parquet files with ONE row group, so Spark reads
-# each as ONE input split and every pre-shuffle operator (Python codec
-# passes, shingle/gram explodes, map-side partial aggregation) runs on
-# one core of local[N]. When the estimated split count of a scan is
-# below the session's parallelism, hash-repartition the scan output by
-# the table's primary key — deterministic (no round-robin sort, no
-# RNG), spread-safe (key cardinality >> partitions), and Catalyst still
-# pushes filters/pruning through RepartitionByExpression into the scan
-# (verified: PushedFilters/ReadSchema unchanged). Downstream groupBy /
-# joins on the same key REUSE the partitioning (no second exchange).
-#
-# Scale honesty: the condition is derived from input size vs
-# spark.sql.files.maxPartitionBytes × defaultParallelism, so on a real
-# table (many splits) this is a no-op — it never adds a shuffle at
-# 100 TB, and at the driver's lower-core bench runs the target adapts
-# to defaultParallelism. Disable with SPARK_GRAFT_SCAN_FANOUT=0.
-# Round 10 (VERDICT r9 #2): NO table fans out at load time any more.
-# Round 9 fanned out ``documents`` globally; the driver's own r8→r9
-# numbers showed the tax on the ~10 light documents consumers
-# (word_count/vocab_*/bigram_*/bpe_* — +2.6 s across the family, 8-core
-# scaling ratios 0.3-0.5) was ~2x the builder's estimate, while every
-# heavy win (winnowing/minhash/simhash/url/gram explodes) is available
-# at the right granularity via the per-operator opt-in below: the
-# compute-heavy operators call ``scan_fanout_for`` on their own input
-# (dedup.shingles / winnowing_fingerprints / simhash /
-# substring_gram_table / _tokenized, text.ngram_novelty, multimodal
-# segment generators, sampling.weighted_sample_topk), so light
-# consumers of the same table never pay the extra exchange.
-# events/orders/lineitem/embeddings load-time fan-out stays rejected on
-# round-9 measurement (+0.4 s per events query, +0.1..+0.9 s per
-# embeddings query).
-_FANOUT_KEY: dict[str, str] = {}
+# Scan fan-out: the sf fixtures are single parquet files with ONE row
+# group, so Spark reads each as ONE input split and every pre-shuffle
+# operator runs on one core of local[N]. No table fans out at load time:
+# a load-time ``documents`` fan-out (round 9) taxed the table's light
+# consumers (word_count/vocab_*/bigram_*/bpe_*, +2.6 s across the
+# family) more than its heavy wins, and events/orders/lineitem/
+# embeddings fan-out was measured slower too (+0.1..+0.9 s per query).
+# Instead the compute-heavy operators (dedup.shingles /
+# winnowing_fingerprints / simhash / substring_gram_table / _tokenized,
+# text.ngram_novelty, multimodal segment generators,
+# sampling.weighted_sample_topk) call ``scan_fanout_for`` on their own
+# input, so light consumers of the same table never pay the exchange.
 _FANOUT_MIN_BYTES = 256 << 10  # below this, single-task is the right plan
-
-
-def _input_bytes(path: str, cap: int) -> int:
-    """Total bytes under ``path`` (file or directory), walking with an
-    early exit once ``cap`` is exceeded — listing a production-scale
-    table stops after a handful of files."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                continue
-            if total > cap:
-                return total
-    return total
 
 
 def _split_bytes(spark: SparkSession) -> int:
@@ -105,21 +65,6 @@ def _split_bytes(spark: SparkSession) -> int:
         return 128 << 20
 
 
-def _scan_fanout(spark: SparkSession, df: DataFrame, path: str, name: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return df
-    key = _FANOUT_KEY.get(name)
-    if key is None:
-        return df
-    target = spark.sparkContext.defaultParallelism
-    split = _split_bytes(spark)
-    size = _input_bytes(path, cap=split * target)
-    est_splits = -(-size // split) if size else 1
-    if size < _FANOUT_MIN_BYTES or est_splits >= target:
-        return df
-    return df.repartition(target, F.col(key))
-
-
 def scan_fanout_for(df: DataFrame, *keys: str, min_bytes: int | None = None) -> DataFrame:
     """Operator-level fan-out: hash-repartition ``df`` by ``keys`` when
     its estimated input size is big enough to deserve parallel map work
@@ -132,8 +77,7 @@ def scan_fanout_for(df: DataFrame, *keys: str, min_bytes: int | None = None) -> 
     globally (the extra exchange is a measured net tax on that table's
     cheap consumers).
 
-    Gate (ADVICE r9: same floor + split estimate as the load-time
-    path): the size estimate comes from the OPTIMIZED LOGICAL plan's
+    Gate: the size estimate comes from the OPTIMIZED LOGICAL plan's
     statistics — one Catalyst analyze+optimize of ``df``, no physical
     planning, no RDD conversion, no job (the previous
     ``df.rdd.getNumPartitions()`` probe forced a full physical planning
@@ -142,9 +86,9 @@ def scan_fanout_for(df: DataFrame, *keys: str, min_bytes: int | None = None) -> 
     scan already has >= parallelism splits so this is a no-op, and
     inputs whose stats are unknown (e.g. localCheckpoint leaves report
     defaultSizeInBytes = huge) also fall through to the no-op side —
-    the safe direction. Inputs under ``min_bytes`` (default: the
-    load-time floor) stay single-task: fanning a tiny fixture adds a
-    shuffle with no win. Same kill switch as the load-time fan-out."""
+    the safe direction. Inputs under ``min_bytes`` (default
+    ``_FANOUT_MIN_BYTES``) stay single-task: fanning a tiny fixture adds
+    a shuffle with no win. ``SPARK_GRAFT_SCAN_FANOUT=0`` turns it off."""
     if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
         return df
     spark = df.sparkSession
@@ -192,11 +136,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _scan_fanout(spark, spark.read.parquet(path), path, name)
+        df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return _ntz_to_instant(df)
-    return _ntz_to_instant(_scan_fanout(spark, spark.read.parquet(path), path, name))
+    return _ntz_to_instant(spark.read.parquet(path))
 
 
 def _ntz_to_instant(df: DataFrame) -> DataFrame:

@@ -51,7 +51,6 @@ def test_load_table_never_fans_out(spark, big_single_file_dir):
     df = T.load_table(spark, big_single_file_dir, "documents")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" not in plan, plan
-    assert not T._FANOUT_KEY
 
 
 def test_fanout_for_fires_on_undersized_scan(spark, big_single_file_dir):
