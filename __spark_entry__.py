@@ -17,19 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from goeventstream_spark import queries as q  # noqa: E402
-# Auto-import every queries_* registration module (a hand-maintained
-# list silently dropped one in round 4; pkgutil iteration makes that
-# impossible).
-import importlib  # noqa: E402
-import pkgutil  # noqa: E402
-
-import goeventstream_spark  # noqa: E402
-
-for _m in pkgutil.iter_modules(goeventstream_spark.__path__):
-    if _m.name.startswith("queries"):
-        importlib.import_module(f"goeventstream_spark.{_m.name}")
 from goeventstream_spark.operators import stream_ops as so  # noqa: E402
 from goeventstream_spark.sources import load_table  # noqa: E402
+
+q.load_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:

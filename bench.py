@@ -224,16 +224,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from goeventstream_spark import get_spark
     from goeventstream_spark import queries as q
-    # Auto-import every queries_* registration module (see
-    # tools/parity_sweep.py for why a hand-maintained list is unsafe).
-    import importlib
-    import pkgutil
-
-    import goeventstream_spark
-
-    for _m in pkgutil.iter_modules(goeventstream_spark.__path__):
-        if _m.name.startswith("queries"):
-            importlib.import_module(f"goeventstream_spark.{_m.name}")
+    q.load_registry()
 
     spark = get_spark(app_name="goeventstream_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")

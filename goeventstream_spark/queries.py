@@ -49,6 +49,23 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+def load_registry() -> dict[str, QueryFn]:
+    """Import every ``queries*`` registration module and return QUERIES.
+
+    The modules are found by ``pkgutil`` rather than a hand-kept list:
+    a hand-kept list silently dropped ``queries_r4`` in round 4 and the
+    parity sweep quietly ran 278 of 279 queries."""
+    import importlib
+    import pkgutil
+
+    import goeventstream_spark
+
+    for m in pkgutil.iter_modules(goeventstream_spark.__path__):
+        if m.name.startswith("queries"):
+            importlib.import_module(f"goeventstream_spark.{m.name}")
+    return QUERIES
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 

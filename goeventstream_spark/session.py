@@ -96,15 +96,15 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # --- streaming state --------------------------------------------
         # RocksDB is the production state store (bounded heap, spills to
-        # disk) and is required by the Spark 4 transformWithStateInPandas
-        # operators in streaming/stateful.py. Its changelog checkpointing
-        # stays off. Tried on the serve loop on top of the checkpoint
-        # manager below, it cut state commits from ~340 to ~35 ms per
-        # trigger but moved file creates into the state load (rocksdbLoad
-        # 1 -> ~100 ms). Poll p50 fell ~420 -> ~350 ms in two 20 s
-        # probes, not yet confirmed by perfbench pairs. It also uploads no
-        # snapshot in a run of a few batches, so rocksdbSstFileSize reads
-        # 0 there (the 10,000-game state test checks sst > 0).
+        # disk) for the keyed operators in streaming/stateful.py. Its
+        # changelog checkpointing stays off. Tried on the serve loop on
+        # top of the checkpoint manager below, it cut state commits from
+        # ~340 to ~35 ms per trigger but moved file creates into the
+        # state load (rocksdbLoad 1 -> ~100 ms). Poll p50 fell ~420 ->
+        # ~350 ms in two 20 s probes, not yet confirmed by perfbench
+        # pairs. It also uploads no snapshot in a run of a few batches,
+        # so rocksdbSstFileSize reads 0 there (the 10,000-game state
+        # test checks sst > 0).
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

@@ -15,8 +15,6 @@ fixtures are single files, but no operator in this package assumes that.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,9 +86,7 @@ def scan_fanout_for(df: DataFrame, *keys: str, min_bytes: int | None = None) -> 
     defaultSizeInBytes = huge) also fall through to the no-op side —
     the safe direction. Inputs under ``min_bytes`` (default
     ``_FANOUT_MIN_BYTES``) stay single-task: fanning a tiny fixture adds
-    a shuffle with no win. ``SPARK_GRAFT_SCAN_FANOUT=0`` turns it off."""
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return df
+    a shuffle with no win."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     floor = _FANOUT_MIN_BYTES if min_bytes is None else min_bytes

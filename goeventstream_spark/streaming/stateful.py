@@ -15,14 +15,13 @@ Reference semantics reproduced (file:line in the reference repo):
               poll — fresh generation, seed, counters
               (model/game.go:76-78, main.go:32-46)
 
-Two stateful operators, each on the Spark 4
-``transformWithStateInPandas`` API (SURVEY.md §2b) with an automatic
-fallback to ``applyInPandasWithState`` when the TWS Python runtime is
-unavailable (its state-server protocol needs ``google.protobuf``,
-which this container does not ship). Both paths share the same
-semantics core, so the fallback is behavior-identical:
+Seven keyed operators, each with one implementation on
+``applyInPandasWithState``: a ``_update`` closure that reads the
+group's state, calls a pure fold core (``_fold_*`` / ``_process_*``)
+and writes the state back. The fold cores hold all the semantics, so
+each can be tested and reasoned about without Spark.
 
-- ``client_registry`` — per-user registry with event-time timers: the
+- ``client_registry`` — per-user registry with event-time timeouts: the
   watermark-driven analogue of the lazy liveness sweep. Timeouts fire
   when the event-time watermark passes last_seen + gap (the batch
   analogues stream_ops.connects/disconnects/latest_state are exact).
@@ -32,6 +31,18 @@ semantics core, so the fallback is behavior-identical:
   reference, and segments generations on > 60 s idle (GC -> restart).
   Output is envelope-equal to the batch ``protocol_replay.connections``
   proxy assignment on in-order input (pinned in test_streaming.py).
+- ``game_server`` — the whole reference request lifecycle per game,
+  emitting one GameResponse envelope per poll.
+- ``streaming_funnel``, ``first_seen_activity``,
+  ``streaming_attribution``, ``streaming_ewma`` — incremental forms of
+  batch analytics queries, exact under a 0-second watermark.
+
+Spark 4's transform-with-state pandas API is not used. Its Python
+state server speaks protobuf, so it needs ``google.protobuf``, which
+this environment does not have; a twin on it never ran and no test
+lane reached it, so it was deleted. Bringing it back means adding a
+test lane that runs it. The state schemas below stay as they are, so
+existing checkpoints keep restoring.
 
 Keyed state per key is one small record (client_registry) or one small
 map of active clients (game_registry) — memory O(active clients), like
@@ -40,11 +51,9 @@ the reference's registries (SURVEY.md §6).
 
 from __future__ import annotations
 
-import importlib.util
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -54,16 +63,6 @@ from pyspark.sql.types import (
 
 CLIENT_TIMEOUT_MS = 10_000
 GAME_TIMEOUT_MS = 60_000
-
-
-def _tws_runtime_available() -> bool:
-    """transformWithStateInPandas drives a Python side-process that
-    talks protobuf to the JVM state server; without google.protobuf the
-    query crashes at schema validation. Gate, don't crash."""
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no parent 'google' namespace package
-        return False
 
 
 # ---------------------------------------------------------------------------
@@ -79,9 +78,10 @@ REGISTRY_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# (last_seen_ms, state_json, timer_ms): timer_ms tracks the registered
-# event-time timer so a newer event can delete the stale one (TWS path;
-# the fallback path re-arms its GroupStateTimeout instead).
+# (last_seen_ms, state_json, timer_ms, last_seq): timer_ms holds the
+# armed event-time timeout (last_seen + timeout). Nothing reads it back
+# (each update re-arms the GroupStateTimeout); it stays in the schema so
+# checkpoints written with it still restore.
 REGISTRY_STATE_SCHEMA = StructType(
     [
         StructField("last_seen_ms", LongType()),
@@ -127,80 +127,31 @@ def _fold_registry_rows(last_seen, best_json, last_seq, pdfs):
     return first_ms, last_seen, best_json, last_seq
 
 
-class _ClientRegistryProcessor:
-    """Spark 4 StatefulProcessor: _c on first contact, LWW state rows,
-    _d via event-time timer when the watermark passes last_seen +
-    timeout."""
+def client_registry(
+    events: DataFrame,
+    timeout_ms: int = CLIENT_TIMEOUT_MS,
+    watermark: str | None = "0 seconds",
+) -> DataFrame:
+    """Keyed registry over user_id: emits ``_c`` on first contact,
+    ``state`` rows on last-writer-wins updates, ``_d`` when the
+    event-time watermark passes last_seen + timeout.
 
-    def __init__(self, timeout_ms: int) -> None:
-        self._timeout_ms = timeout_ms
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("reg", REGISTRY_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import pandas as pd
-
-        user_id = key[0]
-        cur = self._state.get() if self._state.exists() else None
-        existed = cur is not None
-        last_seen = cur[0] if existed else None
-        best_json = cur[1] if existed else None
-        old_timer = cur[2] if existed else None
-        last_seq = cur[3] if existed and len(cur) > 3 else None
-        first_ms, last_seen, best_json, last_seq = _fold_registry_rows(
-            last_seen, best_json, last_seq, rows
-        )
-        if first_ms is None:
-            return
-        out = []
-        if not existed:
-            # connect is stamped at FIRST contact (model/game.go:44-58)
-            out.append((user_id, "_c", first_ms, None))
-        out.append((user_id, "state", last_seen, best_json))
-        new_timer = last_seen + self._timeout_ms
-        if old_timer != new_timer:
-            if old_timer is not None:
-                self._handle.deleteTimer(old_timer)
-            self._handle.registerTimer(new_timer)
-        self._state.update((last_seen, best_json, new_timer, last_seq))
-        yield pd.DataFrame(out, columns=_REG_COLS)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator["object"]:
-        import pandas as pd
-
-        user_id = key[0]
-        if self._state.exists():
-            last_seen = self._state.get()[0]
-            self._state.clear()
-            yield pd.DataFrame(
-                [(user_id, "_d", last_seen + self._timeout_ms, None)],
-                columns=_REG_COLS,
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def _client_registry_tws(src: DataFrame, timeout_ms: int) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so importing this module never requires the
-    # TWS runtime to be importable
-    proc_cls = type(
-        "_ClientRegistryTWS", (_ClientRegistryProcessor, StatefulProcessor), {}
+    Input must carry (user_id, ts, props) — plus ``event_id`` when the
+    source has one, which makes equal-ms LWW ties match batch
+    latest_state's (ts desc, event_id desc) order exactly.
+    ``watermark`` is the
+    watermark delay applied to ``ts``; pass ``None`` to respect a
+    watermark the caller already set instead of overriding it (ADVICE
+    r1). With the default 0-second delay any event arriving out of
+    order across micro-batches is dropped as late and timeouts fire as
+    eagerly as the watermark advances — a tighter sweep than the
+    reference's lazy poll-driven one."""
+    cols = ["user_id", "ts", "props"] + (
+        ["event_id"] if "event_id" in events.columns else []
     )
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(timeout_ms),
-        outputStructType=REGISTRY_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def _client_registry_fallback(src: DataFrame, timeout_ms: int) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    src = events.select(*cols)
+    if watermark is not None:
+        src = src.withWatermark("ts", watermark)
 
     def _update(key, pdfs, state):  # uses module fold cores — executors need the package importable
         import pandas as _pd
@@ -238,36 +189,6 @@ def _client_registry_fallback(src: DataFrame, timeout_ms: int) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def client_registry(
-    events: DataFrame,
-    timeout_ms: int = CLIENT_TIMEOUT_MS,
-    watermark: str | None = "0 seconds",
-) -> DataFrame:
-    """Keyed registry over user_id: emits ``_c`` on first contact,
-    ``state`` rows on last-writer-wins updates, ``_d`` when the
-    event-time watermark passes last_seen + timeout.
-
-    Input must carry (user_id, ts, props) — plus ``event_id`` when the
-    source has one, which makes equal-ms LWW ties match batch
-    latest_state's (ts desc, event_id desc) order exactly.
-    ``watermark`` is the
-    watermark delay applied to ``ts``; pass ``None`` to respect a
-    watermark the caller already set instead of overriding it (ADVICE
-    r1). With the default 0-second delay any event arriving out of
-    order across micro-batches is dropped as late and timeouts fire as
-    eagerly as the watermark advances — a tighter sweep than the
-    reference's lazy poll-driven one."""
-    cols = ["user_id", "ts", "props"] + (
-        ["event_id"] if "event_id" in events.columns else []
-    )
-    src = events.select(*cols)
-    if watermark is not None:
-        src = src.withWatermark("ts", watermark)
-    if _tws_runtime_available():
-        return _client_registry_tws(src, timeout_ms)
-    return _client_registry_fallback(src, timeout_ms)
 
 
 # ---------------------------------------------------------------------------
@@ -344,85 +265,25 @@ def _process_game_polls(
     return gen, last_poll, next_proxy, out
 
 
-class _GameRegistryProcessor:
-    """Spark 4 StatefulProcessor: one key = one game = the reference's
-    one mutex. No timers: every transition is poll-driven exactly like
-    the reference, so a trailing silent client stays until GC — also
-    like the reference. Equal-ms ties break by arrival sequence
-    (sync_id when provided), matching the batch replay's proxy tie
-    order and the reference's serialized request loop."""
-
-    def __init__(self, client_timeout_ms: int, game_timeout_ms: int) -> None:
-        self._client_timeout_ms = client_timeout_ms
-        self._game_timeout_ms = game_timeout_ms
-
-    def init(self, handle) -> None:
-        self._meta = handle.getValueState("meta", GAME_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import json
-
-        import pandas as pd
-
-        game = key[0]
-        meta = self._meta.get() if self._meta.exists() else None
-        gen, last_poll, next_proxy = (meta[0], meta[1], meta[2]) if meta else (0, None, 1)
-        active = (
-            {int(u): (p, t) for u, (p, t) in json.loads(meta[3]).items()} if meta else {}
-        )
-        polls = []
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            seqs = (
-                pdf["sync_id"].tolist()
-                if "sync_id" in pdf.columns
-                else pdf["user_id"].tolist()
-            )
-            polls.extend(
-                zip(pdf["poll_ms"].tolist(), seqs, pdf["user_id"].tolist())
-            )
-        if not polls:
-            return
-        gen, last_poll, next_proxy, out = _process_game_polls(
-            game,
-            gen,
-            last_poll,
-            next_proxy,
-            active,
-            polls,
-            self._client_timeout_ms,
-            self._game_timeout_ms,
-        )
-        self._meta.update(
-            (gen, last_poll, next_proxy, json.dumps({str(u): v for u, v in active.items()}))
-        )
-        yield pd.DataFrame(out, columns=_GAME_COLS)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator["object"]:
-        return
-        yield  # pragma: no cover
-
-    def close(self) -> None:
-        pass
-
-
-def _game_registry_tws(src: DataFrame, client_timeout_ms: int, game_timeout_ms: int) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("_GameRegistryTWS", (_GameRegistryProcessor, StatefulProcessor), {})
-    return src.groupBy("game").transformWithStateInPandas(
-        statefulProcessor=proc_cls(client_timeout_ms, game_timeout_ms),
-        outputStructType=GAME_REGISTRY_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _game_registry_fallback(
-    src: DataFrame, client_timeout_ms: int, game_timeout_ms: int
+def game_registry(
+    polls: DataFrame,
+    client_timeout_ms: int = CLIENT_TIMEOUT_MS,
+    game_timeout_ms: int = GAME_TIMEOUT_MS,
 ) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Streaming per-game state machine with proxy-id allocation
+    (VERDICT r1 next-#5): input must carry (game, user_id, poll_ms)
+    and arrive in event-time order across micro-batches (the in-order
+    single-writer assumption the reference's HTTP loop provides).
+    Emits ``_a`` per game instance and ``_c``/``_d`` with the exact
+    per-game monotone proxy ids of model/game.go:49-53; envelope-equal
+    to batch ``protocol_replay.connections`` (test_streaming.py). Pass
+    a ``sync_id`` column when the source has an arrival sequence —
+    equal-ms polls then tie in arrival order exactly like the batch
+    replay; without one, ties fall back to user_id."""
+    cols = ["game", "user_id", "poll_ms"] + (
+        ["sync_id"] if "sync_id" in polls.columns else []
+    )
+    src = polls.select(*cols)
 
     def _update(key, pdfs, state):  # uses module fold cores — executors need the package importable
         import json as _json
@@ -468,30 +329,6 @@ def _game_registry_fallback(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def game_registry(
-    polls: DataFrame,
-    client_timeout_ms: int = CLIENT_TIMEOUT_MS,
-    game_timeout_ms: int = GAME_TIMEOUT_MS,
-) -> DataFrame:
-    """Streaming per-game state machine with proxy-id allocation
-    (VERDICT r1 next-#5): input must carry (game, user_id, poll_ms)
-    and arrive in event-time order across micro-batches (the in-order
-    single-writer assumption the reference's HTTP loop provides).
-    Emits ``_a`` per game instance and ``_c``/``_d`` with the exact
-    per-game monotone proxy ids of model/game.go:49-53; envelope-equal
-    to batch ``protocol_replay.connections`` (test_streaming.py). Pass
-    a ``sync_id`` column when the source has an arrival sequence —
-    equal-ms polls then tie in arrival order exactly like the batch
-    replay; without one, ties fall back to user_id."""
-    cols = ["game", "user_id", "poll_ms"] + (
-        ["sync_id"] if "sync_id" in polls.columns else []
-    )
-    src = polls.select(*cols)
-    if _tws_runtime_available():
-        return _game_registry_tws(src, client_timeout_ms, game_timeout_ms)
-    return _game_registry_fallback(src, client_timeout_ms, game_timeout_ms)
 
 
 # ---------------------------------------------------------------------------
@@ -541,69 +378,6 @@ def _advance_funnel(stage, pdfs, steps):
     return changed, (tv, tc, tp)
 
 
-class _FunnelProcessor:
-    """Spark 4 StatefulProcessor: per-user funnel stage machine —
-    emits the user's (t_view, t_click, t_purchase) row whenever a
-    stage advances. The streaming twin of analytics.funnel (same
-    semantics under in-order arrival; the batch form is the oracle)."""
-
-    def __init__(self, steps) -> None:
-        self._steps = steps
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("funnel", FUNNEL_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import pandas as pd
-
-        cur = self._state.get() if self._state.exists() else (None, None, None)
-        changed, new = _advance_funnel(cur, rows, self._steps)
-        if not changed:
-            return
-        self._state.update(new)
-        yield pd.DataFrame([(key[0], *new)], columns=_FUNNEL_COLS)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _funnel_tws(src: DataFrame, steps) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("_FunnelTWS", (_FunnelProcessor, StatefulProcessor), {})
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(steps),
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-def _funnel_fallback(src: DataFrame, steps) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def _update(key, pdfs, state):  # uses module fold cores — executors need the package importable
-        import pandas as _pd
-
-        cur = state.get if state.exists else (None, None, None)
-        changed, new = _advance_funnel(cur, pdfs, steps)
-        if not changed:
-            return
-        state.update(new)
-        yield _pd.DataFrame([(key[0], *new)], columns=_FUNNEL_COLS)
-
-    return src.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),
@@ -623,9 +397,24 @@ def streaming_funnel(
     src = events.select("user_id", "ts", "event_type")
     if watermark is not None:
         src = src.withWatermark("ts", watermark)
-    if _tws_runtime_available():
-        return _funnel_tws(src, steps)
-    return _funnel_fallback(src, steps)
+
+    def _update(key, pdfs, state):  # uses module fold cores — executors need the package importable
+        import pandas as _pd
+
+        cur = state.get if state.exists else (None, None, None)
+        changed, new = _advance_funnel(cur, pdfs, steps)
+        if not changed:
+            return
+        state.update(new)
+        yield _pd.DataFrame([(key[0], *new)], columns=_FUNNEL_COLS)
+
+    return src.groupBy("user_id").applyInPandasWithState(
+        _update,
+        outputStructType=FUNNEL_OUTPUT_SCHEMA,
+        stateStructType=FUNNEL_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -804,75 +593,6 @@ def _fold_server_batch(blob, game, pdfs, client_timeout_ms, game_timeout_ms):
     return _json.dumps(st), out
 
 
-GAME_SERVER_LOG_SCHEMA = StructType(
-    [
-        StructField("t", LongType()),
-        StructField("kind", LongType()),
-        StructField("etype", StringType()),
-        StructField("origin", StringType()),
-        StructField("body", StringType()),
-    ]
-)
-
-
-class _GameServerProcessor:
-    """One key = one game = the reference's one mutex: the whole
-    server, stream-resident. The mutable HEAD (registry + clocks + LWW
-    states — O(clients)) lives in one JSON ValueState; the append-only
-    event LOG lives in a ListState, so each micro-batch WRITES only the
-    entries it appended (plus one small head blob) instead of
-    re-serializing the whole O(log-length) game struct. The log is
-    still READ each batch — GetDeltaEvents is a scan of the whole
-    current-generation log by definition (model/eventStream.go:63-71);
-    memory stays O(log length) per game per generation exactly like the
-    reference, bounded by the GC/restart there and here."""
-
-    def __init__(self, client_timeout_ms: int, game_timeout_ms: int) -> None:
-        self._client_timeout_ms = client_timeout_ms
-        self._game_timeout_ms = game_timeout_ms
-
-    def init(self, handle) -> None:
-        self._st = handle.getValueState("server", GAME_SERVER_STATE_SCHEMA)
-        self._log = handle.getListState("log", GAME_SERVER_LOG_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import json
-
-        import pandas as pd
-
-        polls = _parse_server_polls(rows)
-        if polls is None:
-            return
-        if self._st.exists():
-            st = json.loads(self._st.get()[0])
-            st["log"] = [
-                [int(t), int(k), e, o, b] for (t, k, e, o, b) in self._log.get()
-            ]
-        else:
-            st = _new_server_state()
-        gen0, n0 = st["gen"], len(st["log"])
-        out = _process_server_polls(
-            st, key[0], polls, self._client_timeout_ms, self._game_timeout_ms
-        )
-        log = st.pop("log")  # head blob excludes the log
-        self._st.update((json.dumps(st),))
-        if st["gen"] != gen0:
-            # restart(s) this batch: the list is the fresh generation's log
-            self._log.clear()
-            if log:
-                self._log.appendList([tuple(e) for e in log])
-        elif len(log) > n0:
-            self._log.appendList([tuple(e) for e in log[n0:]])
-        yield pd.DataFrame(out, columns=_SERVER_COLS)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator["object"]:
-        return
-        yield  # pragma: no cover
-
-    def close(self) -> None:
-        pass
-
-
 def game_server(
     polls: DataFrame,
     client_timeout_ms: int = CLIENT_TIMEOUT_MS,
@@ -895,19 +615,6 @@ def game_server(
     src = polls.select(
         "game", "sync_id", "user_id", "poll_ms", "posted_json", "state_json"
     )
-    if _tws_runtime_available():
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        proc_cls = type("_GameServerTWS", (_GameServerProcessor, StatefulProcessor), {})
-        return src.groupBy("game").transformWithStateInPandas(
-            statefulProcessor=proc_cls(client_timeout_ms, game_timeout_ms),
-            outputStructType=GAME_SERVER_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     ct, gt = client_timeout_ms, game_timeout_ms
 
     def _update(key, pdfs, state):
@@ -945,8 +652,6 @@ FIRST_SEEN_STATE_SCHEMA = StructType(
     [StructField("first_day", StringType()), StructField("last_day", StringType())]
 )
 
-_FS_COLS = ["user_id", "day", "is_new"]
-
 
 def _fold_first_seen(first_day, last_day, pdfs):
     """Shared semantics core: fold a batch of ts rows into new
@@ -966,72 +671,6 @@ def _fold_first_seen(first_day, last_day, pdfs):
             last_day = day
             out.append((day, 1 if day == first_day else 0))
     return first_day, last_day, out
-
-
-class _FirstSeenProcessor:
-    """Spark 4 StatefulProcessor: emits one (user_id, day, is_new) row
-    the first time each (user, day) activity appears; is_new marks the
-    user's first-ever day. State is two date strings per user."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("fs", FIRST_SEEN_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import pandas as pd
-
-        cur = self._state.get() if self._state.exists() else None
-        first_day, last_day, out = _fold_first_seen(
-            cur[0] if cur else None, cur[1] if cur else None, rows
-        )
-        if not out:
-            return
-        self._state.update((first_day, last_day))
-        yield pd.DataFrame(
-            [(key[0], d, n) for d, n in out], columns=_FS_COLS
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _first_seen_tws(src: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("_FirstSeenTWS", (_FirstSeenProcessor, StatefulProcessor), {})
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(),
-        outputStructType=FIRST_SEEN_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _first_seen_fallback(src: DataFrame) -> DataFrame:
-    def _update(key, pdfs, state):
-        # references the module-level fold core — executors must be
-        # able to import goeventstream_spark (true under pytest/local
-        # mode; ship the package via --py-files on a cluster)
-        import pandas as pd
-
-        cur = state.get if state.exists else (None, None)
-        first_day, last_day, out = _fold_first_seen(cur[0], cur[1], pdfs)
-        if not out:
-            return
-        state.update((first_day, last_day))
-        yield pd.DataFrame([(key[0], d, n) for d, n in out], columns=["user_id", "day", "is_new"])
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return src.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=FIRST_SEEN_OUTPUT_SCHEMA,
-        stateStructType=FIRST_SEEN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def first_seen_activity(
@@ -1064,9 +703,27 @@ def first_seen_activity(
             "Use the batch daily_user_accounting query for late data."
         )
     src = events.select("user_id", "ts").withWatermark("ts", watermark)
-    if _tws_runtime_available():
-        return _first_seen_tws(src)
-    return _first_seen_fallback(src)
+
+    def _update(key, pdfs, state):
+        # references the module-level fold core — executors must be
+        # able to import goeventstream_spark (true under pytest/local
+        # mode; ship the package via --py-files on a cluster)
+        import pandas as pd
+
+        cur = state.get if state.exists else (None, None)
+        first_day, last_day, out = _fold_first_seen(cur[0], cur[1], pdfs)
+        if not out:
+            return
+        state.update((first_day, last_day))
+        yield pd.DataFrame([(key[0], d, n) for d, n in out], columns=["user_id", "day", "is_new"])
+
+    return src.groupBy("user_id").applyInPandasWithState(
+        _update,
+        outputStructType=FIRST_SEEN_OUTPUT_SCHEMA,
+        stateStructType=FIRST_SEEN_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 _WM_UNIT_MS = {
@@ -1114,7 +771,6 @@ ATTRIB_STATE_SCHEMA = StructType(
     [StructField("lt_channel", StringType()), StructField("lt_ms", LongType())]
 )
 
-_ATTRIB_COLS = ["user_id", "channel", "cents", "purchase_ms"]
 ATTRIB_LOOKBACK_MS = 7 * 24 * 3600 * 1000
 
 
@@ -1155,72 +811,6 @@ def _fold_attrib(lt_channel, lt_ms, pdfs):
     return lt_channel, lt_ms, out
 
 
-class _AttributionProcessor:
-    """Spark 4 StatefulProcessor: per-user carried last touch; emits
-    one attributed row per purchase."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("lt", ATTRIB_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import pandas as pd
-
-        cur = self._state.get() if self._state.exists() else (None, None)
-        lt_channel, lt_ms, out = _fold_attrib(cur[0], cur[1], rows)
-        if lt_ms is not None:
-            self._state.update((lt_channel, lt_ms))
-        if out:
-            yield pd.DataFrame(
-                [(key[0], ch, c, ms) for ch, c, ms in out], columns=_ATTRIB_COLS
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _attribution_tws(src: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("_AttributionTWS", (_AttributionProcessor, StatefulProcessor), {})
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(),
-        outputStructType=ATTRIB_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _attribution_fallback(src: DataFrame) -> DataFrame:
-    def _update(key, pdfs, state):
-        # references the module-level fold core — executors must be
-        # able to import goeventstream_spark (true under pytest/local
-        # mode; ship the package via --py-files on a cluster)
-        import pandas as pd
-
-        cur = state.get if state.exists else (None, None)
-        lt_channel, lt_ms, out = _fold_attrib(cur[0], cur[1], pdfs)
-        if lt_ms is not None:
-            state.update((lt_channel, lt_ms))
-        if out:
-            yield pd.DataFrame(
-                [(key[0], ch, c, ms) for ch, c, ms in out],
-                columns=["user_id", "channel", "cents", "purchase_ms"],
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return src.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=ATTRIB_OUTPUT_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_attribution(
     events: DataFrame, watermark: str | None = "0 seconds"
 ) -> DataFrame:
@@ -1253,9 +843,30 @@ def streaming_attribution(
     )
     if watermark is not None:
         src = src.withWatermark("ts", watermark)
-    if _tws_runtime_available():
-        return _attribution_tws(src)
-    return _attribution_fallback(src)
+
+    def _update(key, pdfs, state):
+        # references the module-level fold core — executors must be
+        # able to import goeventstream_spark (true under pytest/local
+        # mode; ship the package via --py-files on a cluster)
+        import pandas as pd
+
+        cur = state.get if state.exists else (None, None)
+        lt_channel, lt_ms, out = _fold_attrib(cur[0], cur[1], pdfs)
+        if lt_ms is not None:
+            state.update((lt_channel, lt_ms))
+        if out:
+            yield pd.DataFrame(
+                [(key[0], ch, c, ms) for ch, c, ms in out],
+                columns=["user_id", "channel", "cents", "purchase_ms"],
+            )
+
+    return src.groupBy("user_id").applyInPandasWithState(
+        _update,
+        outputStructType=ATTRIB_OUTPUT_SCHEMA,
+        stateStructType=ATTRIB_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1279,8 +890,6 @@ EWMA_STATE_SCHEMA = StructType(
         StructField("has_prev", LongType()),
     ]
 )
-
-_EWMA_COLS = ["event_type", "hour_epoch", "cnt", "ewma_ppm"]
 
 
 def _fold_ewma(state, pdfs):
@@ -1334,77 +943,6 @@ def _fold_ewma(state, pdfs):
     return (open_hour, open_cnt, e_prev, has_prev), out
 
 
-class _EwmaProcessor:
-    """Spark 4 StatefulProcessor: closes an hour (emitting cnt + the
-    integer EWMA) when the first event of a later hour arrives; gap
-    hours emit cnt=0. The still-open final hour is never emitted —
-    batch equivalence is ewma_series minus each key's max hour."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("ew", EWMA_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator["object"]:
-        import pandas as pd
-
-        cur = (
-            tuple(self._state.get())
-            if self._state.exists()
-            else (None, 0, 0, 0)
-        )
-        new_state, out = _fold_ewma(cur, rows)
-        if new_state[0] is not None:
-            self._state.update(tuple(new_state))
-        if not out:
-            return
-        yield pd.DataFrame(
-            [(key[0], h * 3600, c, e) for h, c, e in out], columns=_EWMA_COLS
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def _ewma_tws(src: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("_EwmaTWS", (_EwmaProcessor, StatefulProcessor), {})
-    return src.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=proc_cls(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _ewma_fallback(src: DataFrame) -> DataFrame:
-    def _update(key, pdfs, state):
-        import pandas as pd
-
-        cur = state.get if state.exists else (None, 0, 0, 0)
-        new_state, out = _fold_ewma(tuple(cur), pdfs)
-        if new_state[0] is not None:
-            state.update(tuple(new_state))
-        if not out:
-            return
-        yield pd.DataFrame(
-            [(key[0], h * 3600, c, e) for h, c, e in out],
-            columns=["event_type", "hour_epoch", "cnt", "ewma_ppm"],
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return src.groupBy("event_type").applyInPandasWithState(
-        _update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_ewma(
     events: DataFrame, watermark: str | None = "0 seconds"
 ) -> DataFrame:
@@ -1431,6 +969,25 @@ def streaming_ewma(
             "batch ewma_series for late data."
         )
     src = events.select("event_type", "ts").withWatermark("ts", watermark)
-    if _tws_runtime_available():
-        return _ewma_tws(src)
-    return _ewma_fallback(src)
+
+    def _update(key, pdfs, state):
+        import pandas as pd
+
+        cur = state.get if state.exists else (None, 0, 0, 0)
+        new_state, out = _fold_ewma(tuple(cur), pdfs)
+        if new_state[0] is not None:
+            state.update(tuple(new_state))
+        if not out:
+            return
+        yield pd.DataFrame(
+            [(key[0], h * 3600, c, e) for h, c, e in out],
+            columns=["event_type", "hour_epoch", "cnt", "ewma_ppm"],
+        )
+
+    return src.groupBy("event_type").applyInPandasWithState(
+        _update,
+        outputStructType=EWMA_OUTPUT_SCHEMA,
+        stateStructType=EWMA_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )

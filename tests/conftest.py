@@ -8,18 +8,10 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from goeventstream_spark import get_spark  # noqa: E402
+from goeventstream_spark.queries import load_registry  # noqa: E402
 
-# Auto-import every queries_* registration module so the full registry
-# is visible to all test modules (a hand-maintained list in one test
-# silently missed the new queries_r4 in round 4).
-import importlib  # noqa: E402
-import pkgutil  # noqa: E402
-
-import goeventstream_spark  # noqa: E402
-
-for _m in pkgutil.iter_modules(goeventstream_spark.__path__):
-    if _m.name.startswith("queries"):
-        importlib.import_module(f"goeventstream_spark.{_m.name}")
+# Register every query before any test module looks one up.
+load_registry()
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

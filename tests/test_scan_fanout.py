@@ -106,15 +106,6 @@ def test_fanout_for_noop_when_scan_already_parallel(
     assert "REPARTITION_BY_NUM" not in plan, plan
 
 
-def test_fanout_for_env_kill_switch(spark, big_single_file_dir, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "0")
-    df = T.scan_fanout_for(
-        T.load_table(spark, big_single_file_dir, "documents"), "doc_id"
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" not in plan, plan
-
-
 def test_heavy_operator_opts_in(spark, big_single_file_dir):
     # dedup.shingles is a heavy consumer: its plan over an undersized
     # single-split input must carry the opt-in repartition

@@ -26,16 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import importlib
-import pkgutil
-
-import goeventstream_spark
-
-for _m in pkgutil.iter_modules(goeventstream_spark.__path__):
-    if _m.name.startswith("queries"):
-        importlib.import_module(f"goeventstream_spark.{_m.name}")
 from goeventstream_spark import queries as q
 from goeventstream_spark.session import get_spark
+
+q.load_registry()
 
 
 def plan_features(plan: str) -> dict[str, int]:

@@ -17,21 +17,11 @@ import traceback
 # sys.path, not the repo root, so add the root explicitly.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Auto-import every queries_* module so a newly added registration
-# module can never be silently missing from the sweep (round 4: a
-# hand-maintained import list dropped queries_r4 and the sweep quietly
-# ran 278/279).
-import importlib
-import pkgutil
-
-import goeventstream_spark
-
-for _m in pkgutil.iter_modules(goeventstream_spark.__path__):
-    if _m.name.startswith("queries"):
-        importlib.import_module(f"goeventstream_spark.{_m.name}")
 from goeventstream_spark import queries as q
 from goeventstream_spark.session import get_spark
 from tests.oracle import assert_frames_match, run_oracle
+
+q.load_registry()
 
 
 def main() -> int:
