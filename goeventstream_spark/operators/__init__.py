@@ -1,18 +1,1 @@
-"""Operator package. Session-scoped memo hygiene lives here:
-``clear_shared_caches()`` is the one call that invalidates every
-detect-once/consume-many memo (shared_substring_runs,
-shared_capped_cells) — required whenever data behind a cache_key is
-regenerated mid-session (ADVICE r8)."""
-
-from __future__ import annotations
-
-
-def clear_shared_caches() -> dict:
-    """Invalidate every session-scoped operator memo. Returns the
-    per-cache count of entries dropped."""
-    from goeventstream_spark.operators import clustering, dedup
-
-    return {
-        "substring_runs": dedup.clear_shared_runs_cache(),
-        "capped_cells": clustering.clear_shared_capped_cache(),
-    }
+"""Operator package: the DataFrame operators the registered queries compose."""

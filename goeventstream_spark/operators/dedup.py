@@ -1295,63 +1295,6 @@ def repeated_substring_runs(
     return _matches_to_runs(m, min_len)
 
 
-_SHARED_RUNS_CACHE: "dict[tuple, DataFrame]" = {}
-_SHARED_RUNS_CACHE_MAX = 8
-
-
-def clear_shared_runs_cache() -> int:
-    """Explicitly invalidate the shared_substring_runs memo,
-    unpersisting every cached relation (ADVICE r8: the memo assumes
-    the data behind each cache_key is immutable for the session's
-    lifetime — callers that regenerate or append to a keyed corpus
-    mid-session MUST call this, or consumers silently read the stale
-    persisted detection). Also the supported way for plan-shape tests
-    to pin the full pipeline instead of an InMemoryTableScan. Returns
-    the number of entries dropped."""
-    n = len(_SHARED_RUNS_CACHE)
-    while _SHARED_RUNS_CACHE:
-        _SHARED_RUNS_CACHE.popitem()[1].unpersist()
-    return n
-
-
-def shared_substring_runs(
-    docs: DataFrame,
-    cache_key: object,
-    min_len: int = 20,
-    max_df: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Session-scoped memo + persist of repeated_substring_runs — the
-    shared detection relation its four declared consumers read
-    (substring_dedup_runs / _coverage / _strip_report / _apply), the
-    same in-session materialization discipline as
-    clustering.shared_capped_cells. Unlike the cell assignment (whose
-    cost is DRIVER-side trajectory collects, so a lazy plan suffices),
-    the runs relation's cost is plan EXECUTION (gram explode +
-    stop-list + match join), so the memoized DataFrame is persist()ed:
-    the first consumer's action computes and caches it — corpus-runs
-    are a tiny fraction of corpus size (one row per maximal duplicated
-    span) — and the other three read the cache, exactly the
-    detect-once / consume-many shape of a real Lee et al. pipeline.
-    ``cache_key`` is the corpus identity (callers pass sf_dir); the
-    memo key adds the session and every detection parameter; bounded
-    FIFO, evicted entries unpersisted. The keyed corpus is assumed
-    immutable for the session — if it is regenerated or appended to,
-    call clear_shared_runs_cache() / operators.clear_shared_caches()
-    or consumers silently read the stale persisted detection."""
-    key = (docs.sparkSession, cache_key, min_len, max_df, id_col, text_col)
-    df = _SHARED_RUNS_CACHE.get(key)
-    if df is None:
-        df = repeated_substring_runs(
-            docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
-        ).persist()
-        while len(_SHARED_RUNS_CACHE) >= _SHARED_RUNS_CACHE_MAX:
-            _SHARED_RUNS_CACHE.pop(next(iter(_SHARED_RUNS_CACHE))).unpersist()
-        _SHARED_RUNS_CACHE[key] = df
-    return df
-
-
 def _substring_stoplist(grams: DataFrame, max_df: int, id_col: str) -> DataFrame:
     """Grams seen in 2..max_df DISTINCT docs — the eligible seed set."""
     return (
@@ -1515,7 +1458,6 @@ def substring_dup_coverage(
     max_df: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    runs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document duplicated-character coverage: the union length of
     every repeated_substring_runs interval touching the document (as
@@ -1527,14 +1469,10 @@ def substring_dup_coverage(
     runs on different diagonals cover the same span) never double
     count. The sweep window partitions per doc_id, bounded by that
     doc's run count. Output: (doc_id, dup_chars), docs with no runs
-    absent (left-join + coalesce at the call site).
-
-    ``runs``: pass a precomputed repeated_substring_runs relation
-    (e.g. shared_substring_runs) to skip re-detection."""
-    if runs is None:
-        runs = repeated_substring_runs(
-            docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
-        )
+    absent (left-join + coalesce at the call site)."""
+    runs = repeated_substring_runs(
+        docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
+    )
     iv = runs.select(
         F.col("doc_a").alias(id_col),
         F.col("start_a").alias("s"),
@@ -1578,7 +1516,6 @@ def substring_strip_savings(
     max_df: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    runs: DataFrame | None = None,
 ) -> DataFrame:
     """The APPLY half of exact substring dedup (Lee et al. 2022 §3:
     remove every duplicated substring occurrence except one): per
@@ -1588,14 +1525,10 @@ def substring_strip_savings(
     the lower id always keeps its copy; a doc can still lose chars it
     keeps against one partner but loses against a lower one — the
     union handles the overlap exactly). Output: (doc_id,
-    removed_chars); docs never on a b-side are absent.
-
-    ``runs``: pass a precomputed repeated_substring_runs relation
-    (e.g. shared_substring_runs) to skip re-detection."""
-    if runs is None:
-        runs = repeated_substring_runs(
-            docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
-        )
+    removed_chars); docs never on a b-side are absent."""
+    runs = repeated_substring_runs(
+        docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
+    )
     iv = runs.select(
         F.col("doc_b").alias(id_col),
         F.col("start_b").alias("s"),
@@ -1631,8 +1564,9 @@ def substring_dedup_apply(
     co-locate a doc's text with its islands (one merge join on the id;
     forced merge, the standing Generate-estimate rule).
 
-    ``runs``: pass a precomputed repeated_substring_runs relation
-    (e.g. shared_substring_runs) to skip re-detection."""
+    ``runs``: a repeated_substring_runs relation the caller already
+    holds over ``docs`` (substring_apply_round2 checkpoints its pass-2
+    runs for two consumers); detected here when omitted."""
     if runs is None:
         runs = repeated_substring_runs(
             docs, min_len=min_len, max_df=max_df, id_col=id_col, text_col=text_col
@@ -1777,7 +1711,6 @@ def substring_self_apply(
     max_occ: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    runs: DataFrame | None = None,
 ) -> DataFrame:
     """The within-document strip transform — the self half of Lee et
     al.'s apply, completing detect -> transform for self-repeats the
@@ -1788,10 +1721,9 @@ def substring_self_apply(
     correctly through the interval union: for k copies, every run
     lands its start_b on copies 2..k, so exactly the first survives.
     Output: (id_col, text_after) for EVERY input document."""
-    if runs is None:
-        runs = repeated_substring_self_runs(
-            docs, min_len=min_len, max_occ=max_occ, id_col=id_col, text_col=text_col
-        )
+    runs = repeated_substring_self_runs(
+        docs, min_len=min_len, max_occ=max_occ, id_col=id_col, text_col=text_col
+    )
     iv = runs.select(
         F.col(id_col),
         F.col("start_b").alias("s"),

@@ -84,8 +84,8 @@ def weighted_sample_topk(
     weight_col: str,
     key_cols: tuple[str, ...],
     k: int = 100,
-    max_weight: int | None = None,
-    keys_unique: bool = False,
+    *,
+    max_weight: int,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement: keep the k
     rows with the highest priority, where priority = max of ``w``
@@ -110,87 +110,65 @@ def weighted_sample_topk(
     TakeOrderedAndProject (per-partition top-k + driver merge of
     k x partitions rows — no single-partition window).
 
-    Scale contract: md5 work is ceil(w/4) per row, so this form is for
-    BOUNDED integer weights (quantities, bucketed counts — the
-    declared query deciles its weight for exactly this reason). For
-    unbounded weights, decompose w into powers of two and draw one
-    key per set bit (log2(w) fan-out) — same distribution, same
-    exactness.
-    When ``max_weight`` is given (a static bound on the weight, like
-    the declared query's decile cap of 5), the priority is a FLAT
-    ``greatest()`` over max_weight conditional lanes — plain
-    whole-stage-codegen expressions with subexpression-eliminated
-    digests. The higher-order-function form (transform/flatten
-    lambdas) evaluates interpreted per element, which measured ~2x
-    slower end-to-end; it remains the fallback for unbounded weights.
-    Both forms produce identical draws (lane j of digest block j DIV 4).
+    Scale contract: weights are BOUNDED integers (quantities, bucketed
+    counts — the declared query deciles its weight for exactly this
+    reason), and ``max_weight`` is that static bound (the declared
+    query's decile cap of 5). The priority is a FLAT ``greatest()``
+    over max_weight conditional lanes — plain whole-stage-codegen
+    expressions with subexpression-eliminated digests — so md5 work is
+    ceil(w/4) per row. A row heavier than ``max_weight`` fails the
+    query rather than being truncated. For unbounded weights,
+    decompose w into powers of two and draw one key per set bit
+    (log2(w) fan-out) — same distribution, same exactness.
     """
+    if max_weight < 1:
+        raise ValueError(f"max_weight must be >= 1, got {max_weight}")
     ks = [F.col(c) for c in key_cols]
     key_expr = ", ".join(key_cols)
-    if max_weight is not None:
-        if max_weight < 1:
-            raise ValueError(f"max_weight must be >= 1, got {max_weight}")
-        lanes = []
-        for j in range(max_weight):
-            i, lane = divmod(j, 4)
-            draw = F.expr(
-                f"substring(md5(concat_ws('#', {key_expr}, {i})), {lane * 8 + 1}, 8)"
-            )
-            lanes.append(
-                draw if j == 0 else F.when(F.col("_w") > j, draw).otherwise(F.lit(""))
-            )
-        row_pri = F.greatest(*lanes) if len(lanes) > 1 else lanes[0]
-        # Enforce the declared bound instead of silently truncating a
-        # heavier row to max_weight draws (which would skew the
-        # sampling distribution with no signal).
-        row_pri = F.when(
-            F.col("_w") > max_weight,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"weighted_sample_topk: weight exceeds declared max_weight={max_weight}: "
-                    ),
-                    F.col("_w").cast("string"),
-                )
-            ),
-        ).otherwise(row_pri)
-    else:
-        row_pri = F.expr(
-            "array_max(flatten(transform("
-            "  sequence(0, CAST((_w + 3) DIV 4 - 1 AS INT)),"
-            "  i -> transform("
-            "    sequence(0, CAST(least(3, _w - 1 - 4 * i) AS INT)),"
-            f"    l -> substring(md5(concat_ws('#', {key_expr}, i)), l * 8 + 1, 8)))))"
+    lanes = []
+    for j in range(max_weight):
+        i, lane = divmod(j, 4)
+        draw = F.expr(
+            f"substring(md5(concat_ws('#', {key_expr}, {i})), {lane * 8 + 1}, 8)"
         )
+        lanes.append(
+            draw if j == 0 else F.when(F.col("_w") > j, draw).otherwise(F.lit(""))
+        )
+    row_pri = F.greatest(*lanes) if len(lanes) > 1 else lanes[0]
+    # Enforce the declared bound instead of silently truncating a
+    # heavier row to max_weight draws (which would skew the
+    # sampling distribution with no signal).
+    row_pri = F.when(
+        F.col("_w") > max_weight,
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    f"weighted_sample_topk: weight exceeds declared max_weight={max_weight}: "
+                ),
+                F.col("_w").cast("string"),
+            )
+        ),
+    ).otherwise(row_pri)
     # A-Res semantics: weight <= 0 means probability 0 — excluded
-    # outright (also keeps the flat form's ungated first lane and the
-    # fallback's sequence() from fabricating draws for w=0).
+    # outright (also keeps the ungated first lane from fabricating a
+    # draw for w=0).
     # Fan out an undersized scan first: the md5 draw battery is the
     # whole cost of this operator, and a single-split input would run
     # it on one core (measured −1.4 s on the declared lineitem query;
     # no-op when the input is already parallel).
     from goeventstream_spark.sources.tables import scan_fanout_for
 
-    tagged = scan_fanout_for(df, *key_cols).withColumn(
-        "_w", F.col(weight_col).cast("int")
-    ).where(F.col("_w") > 0)
-    if keys_unique:
-        # Caller asserts key_cols is a unique key (e.g. the table PK):
-        # the dedup-merge groupBy is an identity there, so skip its
-        # shuffle entirely — the whole plan is scan + project +
-        # TakeOrderedAndProject (zero exchanges before the top-k merge).
-        pri = tagged.select(
-            *ks, row_pri.alias("sample_pri"), F.col("_w").cast("long").alias("weight")
+    pri = (
+        scan_fanout_for(df, *key_cols)
+        .withColumn("_w", F.col(weight_col).cast("int"))
+        .where(F.col("_w") > 0)
+        .select(*ks, F.col("_w"), row_pri.alias("_pri"))
+        .groupBy(*ks)
+        .agg(
+            F.max("_pri").alias("sample_pri"),
+            F.max("_w").cast("long").alias("weight"),
         )
-    else:
-        pri = (
-            tagged.select(*ks, F.col("_w"), row_pri.alias("_pri"))
-            .groupBy(*ks)
-            .agg(
-                F.max("_pri").alias("sample_pri"),
-                F.max("_w").cast("long").alias("weight"),
-            )
-        )
+    )
     order = [F.col("sample_pri").desc()] + [F.col(c).asc() for c in key_cols]
     return pri.orderBy(*order).limit(k)
 

@@ -694,8 +694,8 @@ def q_knn_graph_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goeventstream_spark.kq_sql import KQ_CAPPED_FRAC
     from goeventstream_spark.operators import clustering
 
-    emb_cell = clustering.shared_capped_cells(
-        _emb(spark, sf_dir), sf_dir, k=4, iters=2, scale=1000,
+    emb_cell = clustering.ivf_cell_assign_capped(
+        _emb(spark, sf_dir), k=4, iters=2, scale=1000,
         cap_frac=KQ_CAPPED_FRAC, max_levels=1,
     )
     return similarity.knn_graph_within_label(

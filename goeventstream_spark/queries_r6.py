@@ -299,8 +299,8 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goeventstream_spark.operators import clustering, sampling
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=2, scale=1000,
+    cells = clustering.ivf_cell_assign_capped(
+        emb, k=4, iters=2, scale=1000,
         cap_frac=KQ_CAPPED_FRAC, max_levels=1,
     ).select(F.col("vec_id"), F.col("cell").cast("long").alias("cell"))
     return sampling.balanced_quota_sample(cells, block_col="cell", id_col="vec_id")
@@ -437,8 +437,8 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from goeventstream_spark.operators.similarity import _arrow_pair_scores
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=2, scale=1000,
+    cells = clustering.ivf_cell_assign_capped(
+        emb, k=4, iters=2, scale=1000,
         cap_frac=KQ_CAPPED_FRAC, max_levels=1,
     )
     # only corpus x bench pairs are scored (a full in-cell triangular

@@ -98,9 +98,8 @@ def q_substring_dedup_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays available as the operator (substring_dedup_coverage consumes
     it un-truncated)."""
     return (
-        dedup.shared_substring_runs(
+        dedup.repeated_substring_runs(
             load_table(spark, sf_dir, "documents"),
-            sf_dir,
             min_len=SUBSTR_MIN_LEN,
             max_df=SUBSTR_MAX_DF,
         )
@@ -155,9 +154,6 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            docs, sf_dir, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
-        ),
     )
     return (
         docs.select("doc_id", "lang", F.length("text").alias("_len"))
@@ -229,9 +225,6 @@ def q_substring_dedup_strip_report(spark: SparkSession, sf_dir: str) -> DataFram
         docs,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            docs, sf_dir, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
-        ),
     )
     return (
         docs.select("doc_id", "lang", F.length("text").alias("_len"))
@@ -327,9 +320,6 @@ def q_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            docs, sf_dir, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
-        ),
     )
     return stripped.select(
         "doc_id",

@@ -175,10 +175,9 @@ def q_substring_apply_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhibits exactly one, pinned in pytest) and (b) hot grams whose df
     fell INTO the band 2..{SUBSTR_MAX_DF} when higher-df copies were
     excised as parts of longer runs. 100 TB shape: one extra
-    corpus-linear gram pass + one census over the stripped text —
-    detection itself comes from the shared session memo; the band join
-    is forced merge (corpus-sized both sides, the standing
-    Generate-estimate rule)."""
+    corpus-linear gram pass + one census over the stripped text on top
+    of the one detection the strip runs; the band join is forced merge
+    (corpus-sized both sides, the standing Generate-estimate rule)."""
     docs = load_table(spark, sf_dir, "documents")
     # lazy checkpoint: the stripped corpus feeds both the second gram
     # pass and the per-language chars_after rollup — the strip's merge
@@ -187,9 +186,6 @@ def q_substring_apply_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            docs, sf_dir, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
-        ),
     ).localCheckpoint(eager=False)
     g2 = dedup.substring_gram_table(
         stripped, min_len=SUBSTR_MIN_LEN, text_col="text_after"
@@ -370,8 +366,8 @@ def q_curate_corpus_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each stage is an existing audited operator; the strip
     is the funnel's one text-bearing shuffle; only the components loop
     breaks the single Catalyst plan (inherent, localCheckpoint per
-    round). Detection over the gated corpus is memoized per
-    (corpus, gate) via shared_substring_runs."""
+    round). Detection runs once, over the gated corpus, inside the
+    strip."""
     docs = load_table(spark, sf_dir, "documents")
     gate = (
         text.gopher_quality_flags(docs)
@@ -391,12 +387,6 @@ def q_curate_corpus_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         gated,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            gated,
-            f"{sf_dir}#gopher-gated",
-            min_len=SUBSTR_MIN_LEN,
-            max_df=SUBSTR_MAX_DF,
-        ),
     ).localCheckpoint(eager=False)
     pairs = dedup.ngram_jaccard_pairs(
         stripped.select("doc_id", F.col("text_after").alias("text"))
@@ -485,17 +475,14 @@ def q_substring_apply_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         min_len=SUBSTR_MIN_LEN,
         max_df=SUBSTR_MAX_DF,
-        runs=dedup.shared_substring_runs(
-            docs, sf_dir, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
-        ),
     ).localCheckpoint(eager=False)
     docs2 = stripped1.select("doc_id", F.col("text_after").alias("text"))
-    runs2 = dedup.shared_substring_runs(
-        docs2,
-        f"{sf_dir}#apply-pass2",
-        min_len=SUBSTR_MIN_LEN,
-        max_df=SUBSTR_MAX_DF,
-    )
+    # lazy checkpoint: runs2 feeds both the pass-2 strip and the
+    # residual_runs rollup — pass-2 detection must run once, not per
+    # consumer
+    runs2 = dedup.repeated_substring_runs(
+        docs2, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF
+    ).localCheckpoint(eager=False)
     stripped2 = dedup.substring_dedup_apply(
         docs2, min_len=SUBSTR_MIN_LEN, max_df=SUBSTR_MAX_DF, runs=runs2
     ).localCheckpoint(eager=False)

@@ -1067,12 +1067,7 @@ def test_substring_dedup_runs_plan_shape(spark, sf_dir):
     equi-joins on the gram hash (no cartesian/nested-loop), and the
     islands window partitions by (pair, diagonal) — never unpartitioned."""
     import goeventstream_spark.queries_r7  # noqa: F401
-    from goeventstream_spark.operators import dedup as _d
 
-    # this test pins the DETECTION pipeline's plan; a warm
-    # shared_substring_runs memo (populated by any earlier test that
-    # ran the queries) would replace it with an InMemoryTableScan
-    _d.clear_shared_runs_cache()
     df = q.QUERIES["substring_dedup_runs"](spark, sf_dir)
     plan = plans.physical_plan(df)
     assert "TakeOrderedAndProject" in plan, plan
@@ -1086,7 +1081,6 @@ def test_substring_dedup_runs_plan_shape(spark, sf_dir):
     # merge hints pin the spill-safe shape)
     assert "BroadcastHashJoin" not in plan, plan
     for name in ("substring_dedup_coverage", "substring_dedup_strip_report"):
-        _d.clear_shared_runs_cache()  # pin the full pipeline, not the cache
         p2 = plans.physical_plan(q.QUERIES[name](spark, sf_dir))
         assert "BroadcastHashJoin" not in p2, (name, p2)
 
@@ -1098,9 +1092,6 @@ def test_substring_apply_and_self_runs_plan_shape(spark, sf_dir):
     Catalyst's static estimate through Generate must not broadcast
     them); every window partitions by a document key; self-runs'
     islands window partitions per doc (doc_a == doc_b)."""
-    from goeventstream_spark.operators import dedup as _d
-
-    _d.clear_shared_runs_cache()
     df = q.QUERIES["substring_dedup_apply"](spark, sf_dir)
     plan = plans.physical_plan(df)
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan

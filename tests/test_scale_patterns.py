@@ -926,56 +926,6 @@ def test_ivf_capped_noop_and_frac_on_fixture(spark, sf_dir):
     assert max(Counter(frac.values()).values()) < max(Counter(base.values()).values())
 
 
-def test_shared_capped_cells_memo(spark, sf_dir, monkeypatch):
-    """VERDICT r7 #2: the capped-IVF guard trajectory is paid ONCE per
-    (session, corpus key, params) — the four consumer queries share a
-    single assignment instead of re-running the ~2.5 s census + seed
-    rank + Lloyd rounds each. Pin: (a) the memo returns the identical
-    DataFrame for an identical key and never re-enters the trajectory;
-    (b) any parameter change is a different key; (c) the memoized
-    result is the direct construction, value-for-value."""
-    from goeventstream_spark.operators import clustering
-    from goeventstream_spark.sources import load_table
-
-    clustering.clear_shared_capped_cache()
-    emb = load_table(spark, sf_dir, "embeddings")
-    want = {
-        r.vec_id: r.cell
-        for r in clustering.ivf_cell_assign_capped(
-            emb, k=4, iters=2, cap_frac=0.26, max_levels=1
-        )
-        .select("vec_id", "cell")
-        .collect()
-    }
-
-    calls = {"n": 0}
-    inner = clustering.ivf_cell_assign_capped
-
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return inner(*a, **kw)
-
-    monkeypatch.setattr(clustering, "ivf_cell_assign_capped", counting)
-    a = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=2, cap_frac=0.26, max_levels=1
-    )
-    b = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=2, cap_frac=0.26, max_levels=1
-    )
-    assert a is b and calls["n"] == 1
-    c = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=2, cap_frac=0.26, max_levels=2
-    )
-    d = clustering.shared_capped_cells(
-        emb, str(sf_dir) + "-other-corpus", k=4, iters=2,
-        cap_frac=0.26, max_levels=1,
-    )
-    assert c is not a and d is not a and calls["n"] == 3
-    got = {r.vec_id: r.cell for r in a.select("vec_id", "cell").collect()}
-    assert got == want
-    clustering.clear_shared_capped_cache()
-
-
 def test_partitioned_lake_executed_scan_pruning(spark, sf_dir, tmp_path):
     """EXECUTED scan-pruning evidence for the (game, date)-partitioned
     event lake — files/partitions actually read, not plan text. A
@@ -1144,8 +1094,8 @@ def test_capped_cells_lake_matches_memo_and_skips_guard(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """VERDICT r8 #4: the persisted capped-cells lake. Pins: (a) the
-    lake-backed assignment is row-equal to the direct trajectory (the
-    memo path's identical construction); (b) a session that finds the
+    lake-backed assignment is row-equal to the direct trajectory
+    (ivf_cell_assign_capped); (b) a session that finds the
     lake provably does NOT re-run the guard trajectory (the
     constructor is poisoned and never called); (c) a parameter
     mismatch against the recorded manifest refuses rather than serving
@@ -1203,31 +1153,3 @@ def test_capped_cells_lake_matches_memo_and_skips_guard(
         clustering.capped_cells_lake(
             emb, lake, k=4, iters=2, cap_frac=0.3, max_levels=1
         )
-
-
-def test_clear_shared_caches_api(spark, sf_dir):
-    """ADVICE r8: the session memos assume immutable data behind each
-    cache_key; clear_shared_caches() is the exported invalidation for
-    callers that regenerate a keyed corpus mid-session (and for tests,
-    instead of reaching into private module dicts). Pin: entries are
-    dropped (runs entries unpersisted), and the next call re-enters
-    the underlying construction."""
-    from goeventstream_spark.operators import clear_shared_caches, clustering, dedup
-    from goeventstream_spark.sources import load_table
-
-    clear_shared_caches()
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_dir, "embeddings")
-    runs = dedup.shared_substring_runs(docs, sf_dir, min_len=20, max_df=4)
-    cells = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=1, cap_frac=0.26, max_levels=1
-    )
-    dropped = clear_shared_caches()
-    assert dropped == {"substring_runs": 1, "capped_cells": 1}
-    assert not runs.storageLevel.useMemory  # unpersisted on invalidation
-    runs2 = dedup.shared_substring_runs(docs, sf_dir, min_len=20, max_df=4)
-    cells2 = clustering.shared_capped_cells(
-        emb, sf_dir, k=4, iters=1, cap_frac=0.26, max_levels=1
-    )
-    assert runs2 is not runs and cells2 is not cells
-    clear_shared_caches()

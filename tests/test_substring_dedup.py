@@ -821,37 +821,48 @@ def test_substring_self_runs_match_python_on_random_corpora(spark, texts):
     assert got == _py_self_runs(texts, k, max_occ)
 
 
-def test_shared_substring_runs_memo(spark, sf_dir, monkeypatch):
-    """The detect-once/consume-many memo (the shared_capped_cells
-    discipline applied to substring detection): identical key returns
-    the identical persisted DataFrame without re-entering detection;
-    any parameter or corpus-key change is a different entry; the
-    memoized result equals direct detection row for row."""
-    from goeventstream_spark.operators import dedup as d
+def test_rewritten_table_is_reread(spark, sf_dir, tmp_path):
+    """A table rewritten at the same path is read afresh: collect
+    substring_dedup_runs, overwrite documents.parquet with a subset
+    that drops the top run's documents, collect again in the same
+    session with the same sf_dir string — the second result is the
+    runs of the NEW table, not a result reused by path."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from goeventstream_spark.queries import QUERIES
+    from goeventstream_spark.queries_r7 import SUBSTR_MAX_DF, SUBSTR_MIN_LEN
     from goeventstream_spark.sources import load_table
 
-    d.clear_shared_runs_cache()
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    want = {
-        tuple(r) for r in d.repeated_substring_runs(docs, 20, 4).collect()
-    }
-    calls = {"n": 0}
-    inner = d.repeated_substring_runs
+    path = tmp_path / "documents.parquet"
+    shutil.copyfile(f"{sf_dir}/documents.parquet", path)
+    first = QUERIES["substring_dedup_runs"](spark, str(tmp_path)).collect()
+    assert first
+    top = {first[0].doc_a, first[0].doc_b}
 
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return inner(*a, **kw)
+    table = pq.read_table(path)
+    dropped = pc.is_in(table["doc_id"], value_set=pa.array(sorted(top)))
+    pq.write_table(table.filter(pc.invert(dropped)), path)
 
-    monkeypatch.setattr(d, "repeated_substring_runs", counting)
-    a = d.shared_substring_runs(docs, sf_dir, min_len=20, max_df=4)
-    b = d.shared_substring_runs(docs, sf_dir, min_len=20, max_df=4)
-    assert a is b and calls["n"] == 1
-    c = d.shared_substring_runs(docs, sf_dir, min_len=20, max_df=3)
-    e = d.shared_substring_runs(docs, str(sf_dir) + "-other", min_len=20, max_df=4)
-    assert c is not a and e is not a and calls["n"] == 3
-    assert {tuple(r) for r in a.collect()} == want and want
-    assert a.storageLevel.useMemory  # persisted: consumers share the compute
-    assert d.clear_shared_runs_cache() >= 3  # the entries built above
+    second = QUERIES["substring_dedup_runs"](spark, str(tmp_path)).collect()
+    want = (
+        repeated_substring_runs(
+            load_table(spark, str(tmp_path), "documents"),
+            min_len=SUBSTR_MIN_LEN,
+            max_df=SUBSTR_MAX_DF,
+        )
+        .orderBy(F.col("match_len").desc(), "doc_a", "doc_b", "start_a", "start_b")
+        .limit(200)
+        .collect()
+    )
+    assert second == want
+    # equality alone is not enough: a persisted runs relation is served
+    # by Spark's cache to ANY plan-equal query, the direct one included
+    assert not any({r.doc_a, r.doc_b} & top for r in second)
 
 
 def test_streaming_substring_strip_matches_batch(spark, sf_dir, tmp_path):

